@@ -62,11 +62,6 @@ def hive_path_col(ts: Column | str) -> Column:
     return F.date_format(ts, HIVE_PATH_PATTERN)
 
 
-def trunc_hour_col(ts: Column | str) -> Column:
-    """``TIMESTAMP_TRUNC(f, HOUR)`` (bq_create_table_ddl.sql:7)."""
-    return F.date_trunc("hour", ts)
-
-
 def partition_columns(ts: Column | str) -> dict[str, Column]:
     """The four zero-padded partition columns derived from a timestamp —
     what Hive-style partition discovery would surface from the path.

@@ -80,14 +80,22 @@ def content_hash(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     )
 
 
-def _minhash_value(shingle_hash: Column, i: int) -> Column:
-    """i-th hash of a shingle: re-hash the precomputed 64-bit shingle hash
-    with the slot index as seed material (``xxhash64(h, i)``). Each slot
-    is an independent strong permutation proxy — deterministic across runs
-    and executors, JVM-evaluated, no modular arithmetic that could stay
-    monotonic in ``h`` (a linear (a*h+b) mod p with small ``a`` never
-    wraps, which would make every slot pick the same min shingle and
-    collapse the signature to one effective hash)."""
+def _minhash_value(shingle_hash: Column, i: int, md5_family: bool) -> Column:
+    """i-th hash of a shingle: re-hash the precomputed shingle hash with
+    the slot index as seed material. Each slot is an independent strong
+    permutation proxy — deterministic across runs and executors,
+    JVM-evaluated, no modular arithmetic that could stay monotonic in
+    ``h`` (a linear (a*h+b) mod p with small ``a`` never wraps, which
+    would make every slot pick the same min shingle and collapse the
+    signature to one effective hash).
+
+    xxhash64 family: ``xxhash64(h, i)`` over the 64-bit shingle hash.
+    md5 family: the first 28 bits of ``md5(md5(shingle) + "_" + i)`` — a
+    full re-hash per slot whose every step (md5 hex, substring, base-16
+    parse) exists verbatim in ANSI SQL/DuckDB."""
+    if md5_family:
+        slot = F.md5(F.concat(shingle_hash, F.lit(f"_{i}")))
+        return F.conv(F.substring(slot, 1, 7), 16, 10).cast("long")
     return F.xxhash64(shingle_hash, F.lit(i))
 
 
@@ -97,6 +105,7 @@ def minhash_signatures(
     text_col: str,
     num_hashes: int = 64,
     shingle_size: int = 3,
+    md5_family: bool = False,
 ) -> DataFrame:
     """Per-document MinHash signature: explode distinct shingles, take the
     column-wise min of ``num_hashes`` universal hashes in ONE groupBy (one
@@ -108,50 +117,22 @@ def minhash_signatures(
     instead of shuffling the exploded (much larger) shingle set. The
     partition count is explicit — AQE would coalesce a size-based
     repartition of a small source back to one task, serializing the
-    expensive hashing."""
+    expensive hashing.
+
+    ``md5_family=True`` swaps the xxhash64 hash family for the md5 one
+    (:func:`_minhash_value`), which a SQL oracle reproduces bit for bit —
+    the value-checkable form of the whole MinHash-LSH pipeline, at ~2×
+    the hash cost."""
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+    h = "m" if md5_family else "h"
     shingled = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(word_shingles(tokenize(F.col(text_col)), shingle_size))).alias(
             "shingle"
         ),
-    ).withColumn("h", F.xxhash64("shingle"))
-    mins = [F.min(_minhash_value(F.col("h"), i)).alias(f"mh_{i}") for i in range(num_hashes)]
-    sig = shingled.groupBy("doc_id").agg(*mins)
-    return sig.select("doc_id", F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("signature"))
-
-
-def minhash_signatures_md5(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    shingle_size: int = 3,
-) -> DataFrame:
-    """MinHash signatures with an md5-derived hash family — the
-    cross-engine-reproducible twin of :func:`minhash_signatures`.
-
-    Slot i hashes a shingle as the first 28 bits of md5(md5(shingle)+"_"+i)
-    — a full re-hash per slot, so slots stay independent (no monotonic
-    (a*h+b) collapse), and every step (md5 hex, substring, base-16 parse)
-    exists verbatim in ANSI SQL/DuckDB. That makes the *entire*
-    MinHash-LSH pipeline oracle-checkable, where the xxhash64 family can
-    only get a rows-only check. ~2× the hash cost of xxhash64 — use the
-    fast family in production, this one to validate the algorithm."""
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    shingled = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.array_distinct(word_shingles(tokenize(F.col(text_col)), shingle_size))
-        ).alias("shingle"),
-    ).withColumn("m", F.md5("shingle"))
+    ).withColumn(h, F.md5("shingle") if md5_family else F.xxhash64("shingle"))
     mins = [
-        F.min(
-            F.conv(F.substring(F.md5(F.concat(F.col("m"), F.lit(f"_{i}"))), 1, 7), 16, 10).cast(
-                "long"
-            )
-        ).alias(f"mh_{i}")
-        for i in range(num_hashes)
+        F.min(_minhash_value(F.col(h), i, md5_family)).alias(f"mh_{i}") for i in range(num_hashes)
     ]
     sig = shingled.groupBy("doc_id").agg(*mins)
     return sig.select("doc_id", F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("signature"))
@@ -402,7 +383,6 @@ def incremental_dedup_batch(
     """
     from ._cache import scoped_persist
 
-    sign = minhash_signatures_md5 if md5_family else minhash_signatures
     corpus_hashes = content_hash(corpus, id_col, text_col).select("content_sha256").distinct()
     # the batch side is bounded by the micro-batch contract and feeds
     # THREE branches (exact-stage semi-join, MinHash signatures, final
@@ -433,8 +413,8 @@ def incremental_dedup_batch(
         .distinct()
     )
     near_ids = incremental_near_dup_ids(
-        sign(corpus, id_col, text_col, num_hashes=num_hashes),
-        sign(b, id_col, text_col, num_hashes=num_hashes),
+        minhash_signatures(corpus, id_col, text_col, num_hashes=num_hashes, md5_family=md5_family),
+        minhash_signatures(b, id_col, text_col, num_hashes=num_hashes, md5_family=md5_family),
         num_bands=num_bands,
         num_hashes=num_hashes,
         threshold=threshold,
@@ -488,38 +468,56 @@ def _simhash_fold_sql(hashes: str, num_bits: int) -> str:
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash fingerprint per document.
+def simhash(df: DataFrame, id_col: str, text_col: str, md5_family: bool = False) -> DataFrame:
+    """SimHash fingerprint per document.
 
     Token hash bit j contributes +1/-1 to bit-slot j; fingerprint bit j
-    is 1 iff the slot sum is positive. Computed per-row over the token
-    array (see ``_simhash_fold_sql``) — a shuffle-free narrow map; the
-    id-repartition only spreads a few-file source across cores (on a
-    real multi-file table it is a no-op choice, not a correctness
-    need)."""
+    is 1 iff the slot sum is positive. Term frequency weights bits
+    (duplicate tokens are NOT deduplicated). Computed per-row over the
+    token array (see ``_simhash_fold_sql``) — a shuffle-free narrow map;
+    the id-repartition only spreads a few-file source across cores (on
+    a real multi-file table it is a no-op choice, not a correctness
+    need).
+
+    The family fixes the width: 64 bits over ``xxhash64(token)``, or,
+    with ``md5_family=True``, 60 bits over the first 15 hex chars of
+    ``md5(token)`` parsed base-16 — 60 bits keeps the fingerprint inside
+    a signed 64-bit everywhere, so a SQL oracle replays it verbatim."""
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+    if md5_family:
+        num_bits = 60
+
+        def token_hash(t):
+            return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
+    else:
+        num_bits, token_hash = 64, F.xxhash64
     staged = df.select(
         F.col(id_col).alias("doc_id"),
-        F.transform(tokenize(F.col(text_col)), lambda t: F.xxhash64(t)).alias("_th"),
+        F.transform(tokenize(F.col(text_col)), lambda t: token_hash(t)).alias("_th"),
     )
     return staged.select(
-        "doc_id", F.expr(_simhash_fold_sql("_th", 64)).alias("simhash")
+        "doc_id", F.expr(_simhash_fold_sql("_th", num_bits)).alias("simhash")
     )
 
 
-def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by Hamming distance ≤ ``max_hamming`` (<16).
+def simhash_near_pairs(
+    fingerprints: DataFrame, max_hamming: int = 3, md5_family: bool = False
+) -> DataFrame:
+    """Near-dup pairs by Hamming distance ≤ ``max_hamming``.
 
-    Block-LSH: split the 64-bit fingerprint into 4 16-bit blocks; any pair
-    within distance 3 shares ≥1 exact block (pigeonhole), so the join is
-    equality on (block_idx, block_value) — shuffleable — then exact
-    popcount verification via bit_count(xor).
+    Block-LSH: split the fingerprint into 4 blocks — 16 bits each for
+    the 64-bit xxhash64 family, 15 bits each for the 60-bit md5 family
+    (``md5_family=True``); any pair within distance 3 shares ≥1 exact
+    block (pigeonhole), so the join is equality on (block_idx,
+    block_value) — shuffleable — then exact popcount verification via
+    bit_count(xor).
 
     Fingerprints are persisted before the self-join so the upstream
     tokenize+hash pipeline runs once, not once per join side (16 B/doc —
     cheap at any scale)."""
     from ._cache import scoped_persist
 
+    width = 15 if md5_family else 16
     fingerprints = scoped_persist(fingerprints, "dedup.simhash_pairs.fps")
     blocks = fingerprints.select(
         "doc_id",
@@ -529,8 +527,8 @@ def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFra
                 *[
                     F.struct(
                         F.lit(i).alias("block"),
-                        F.shiftrightunsigned(F.col("simhash"), i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
+                        F.shiftrightunsigned(F.col("simhash"), i * width)
+                        .bitwiseAND(F.lit((1 << width) - 1))
                         .alias("value"),
                     )
                     for i in range(4)
@@ -693,76 +691,6 @@ def connected_components(
             break
     sym.unpersist()
     return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def simhash_md5(df: DataFrame, id_col: str, text_col: str, num_bits: int = 60) -> DataFrame:
-    """60-bit SimHash with an md5-derived token hash — the cross-engine-
-    reproducible twin of :func:`simhash` (which uses xxhash64 and can
-    only get a rows-only check). Token hash = first 15 hex chars of
-    md5(token) parsed base-16 (60 bits keeps the fingerprint inside a
-    signed 64-bit everywhere). Same shuffle-free per-row fold as the
-    production variant (``_simhash_fold_sql`` at 60-bit width) — the explode +
-    60-conditional-sum groupBy this replaced shuffled one row per TOKEN
-    and regressed 3.7x the moment this key entered the bench; the fold
-    is a narrow map whose cost is bounded by the document, not the
-    corpus. Term frequency weights bits exactly like the production
-    variant (duplicate tokens are NOT deduplicated)."""
-    if num_bits != 60:  # the fold SQL and the block-LSH split are 60-bit
-        raise ValueError("simhash_md5 is fixed at 60 bits (4 x 15-bit blocks)")
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            tokenize(F.col(text_col)),
-            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-        ).alias("_th"),
-    )
-    return staged.select(
-        "doc_id", F.expr(_simhash_fold_sql("_th", 60)).alias("simhash")
-    )
-
-
-def simhash_near_pairs_md5(fingerprints: DataFrame, max_hamming: int = 12) -> DataFrame:
-    """Block-LSH near pairs over 60-bit md5 SimHash: 4 blocks × 15 bits,
-    equality join on (block, value), exact Hamming verify — the same
-    plan as :func:`simhash_near_pairs` with block arithmetic that a SQL
-    oracle replicates bit-for-bit."""
-    from ._cache import scoped_persist
-
-    fingerprints = scoped_persist(fingerprints, "dedup.simhash_pairs_md5.fps")
-    blocks = fingerprints.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block"),
-                        F.shiftrightunsigned(F.col("simhash"), i * 15)
-                        .bitwiseAND(F.lit(0x7FFF))
-                        .alias("value"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bv"),
-    ).select("doc_id", "simhash", F.col("bv.block"), F.col("bv.value"))
-    a, b = blocks.alias("a"), blocks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.value") == F.col("b.value"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
 
 
 def line_dedup(

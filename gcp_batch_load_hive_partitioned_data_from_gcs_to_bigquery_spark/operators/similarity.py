@@ -5,10 +5,10 @@
   ``zip_with``/``aggregate`` expressions (no Python in the hot path).
   O(N·Q·d) but embarrassingly parallel — the right baseline, and the
   verifier for approximate paths.
-* ``lsh_bucket_topk`` — the scale path: random-hyperplane LSH signatures
-  (deterministic, seed-derived hyperplanes) bucket the corpus; each query
-  only scores its own bucket(s). Sub-linear candidate sets at 100 TB, at
-  the cost of approximate recall.
+* ``lsh_multiprobe_topk`` — the scale path: random-hyperplane LSH
+  signatures (deterministic, seed-derived hyperplanes) bucket the corpus;
+  each query only scores its own bucket and its probed neighbors.
+  Sub-linear candidate sets at 100 TB, at the cost of approximate recall.
 
 Everything returns DataFrames and shuffles only on bucket keys; the
 corpus is never collected.
@@ -60,12 +60,13 @@ def cosine_topk(
     window into the output — saves the caller a second corpus scan +
     join-back to re-attach them (the ``countmin_query`` carry pattern).
     Ranking is unaffected: the window orders on (cosine, vec_id) only.
-    Carried names must not collide with the output schema."""
+    Carried names must not collide with the output schema or with the
+    scoring columns (``c_vec``/``c_norm``/``q_vec``/``q_norm``)."""
     carry = list(carry_cols or [])
-    reserved = {"query_id", "vec_id", "cosine", "rank"}
+    reserved = {"query_id", "vec_id", "cosine", "rank", "c_vec", "c_norm", "q_vec", "q_norm"}
     bad = reserved.intersection(carry)
     if bad:
-        raise ValueError(f"carry_cols collide with output columns: {sorted(bad)}")
+        raise ValueError(f"carry_cols collide with output or scoring columns: {sorted(bad)}")
     c = with_double_embedding(corpus, vec_col).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"), *carry
     ).withColumn("c_norm", _norm(F.col("c_vec")))
@@ -166,33 +167,39 @@ def cosine_topk_blas(
     )
 
 
-def hyperplane_signature(vec, num_planes: int, dim: int, seed: int = 42):
+def hyperplane_signature(
+    vec, num_planes: int, dim: int, seed: int = 42, md5_family: bool = False
+):
     """Random-hyperplane LSH bit signature as an int (num_planes ≤ 31).
 
     Hyperplane p, dimension i has deterministic pseudo-random weight ±1
-    from ``xxhash64(p, i, seed)``'s low bit — reproducible across runs,
-    no stored model. sign(v·h_p) is bit p of the signature."""
-    bits = []
-    for p in range(num_planes):
+    — reproducible across runs, no stored model. sign(v·h_p) is bit p of
+    the signature. The xxhash64 family takes the weight from
+    ``xxhash64(p, i, seed)``'s low bit; ``md5_family=True`` uses the
+    literal planes of :func:`hyperplane_weights_md5`, which a SQL oracle
+    regenerates byte for byte."""
+    if md5_family:
+        planes = [F.array(*[F.lit(x) for x in w]) for w in hyperplane_weights_md5(num_planes, dim)]
+    else:
+        planes = [
+            F.transform(
+                F.sequence(F.lit(0), F.lit(dim - 1)),
+                lambda i: F.when(
+                    F.pmod(F.xxhash64(F.lit(p), i, F.lit(seed)), F.lit(2)) == 0,
+                    F.lit(1.0),
+                ).otherwise(F.lit(-1.0)),
+            )
+            for p in range(num_planes)
+        ]
+    sig = None
+    for p, plane in enumerate(planes):
         proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(dim - 1)),
-                    lambda i: F.when(
-                        F.pmod(F.xxhash64(F.lit(p), i, F.lit(seed)), F.lit(2)) == 0,
-                        F.lit(1.0),
-                    ).otherwise(F.lit(-1.0)),
-                ),
-                lambda x, h: x * h,
-            ),
+            F.zip_with(vec, plane, lambda x, h: x * h),
             F.lit(0.0),
             lambda s, v: s + v,
         )
-        bits.append(F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
+        bit = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        sig = bit if sig is None else sig + bit
     return sig
 
 
@@ -259,31 +266,36 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
+    trained: bool = True,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means coarse quantizer
+    """IVF (inverted-file) approximate top-k: a coarse quantizer
     partitions the corpus into ``nlist`` cells; each query scores only its
     ``nprobe`` nearest cells.
 
-    Index build = one KMeans fit on a DETERMINISTIC HASH-SAMPLE (seed-keyed
-    ``xxhash64(vec_id)`` threshold, capped at ~256·nlist vectors — see
-    ``_train_sample``) + one full-corpus assignment pass; the cell id
-    becomes the shuffle/partition key, so a query reads ~``nprobe/nlist``
-    of the corpus instead of all of it. Sampling the fit is what keeps the
-    build LINEAR at 100 TB: with ``nlist ∝ N`` a full-corpus fit would
-    re-scan the corpus every k-means iteration (the one super-linear term
-    this operator used to carry); the sample is partitioning-independent
-    (pure hash predicate), so the trained quantizer is stable for a given
-    (corpus, nlist, seed). Centroids are tiny (nlist × dim) and ride along
-    as a broadcast join — the corpus is never collected.
+    ``trained=True``: index build = one KMeans fit on a DETERMINISTIC
+    HASH-SAMPLE (:func:`_trained_centroid_rows` — seed-keyed
+    ``xxhash64(vec_id)`` threshold, capped at ~256·nlist vectors, see
+    ``_train_sample``) + one full-corpus assignment pass. Sampling the
+    fit is what keeps the build LINEAR at 100 TB: with ``nlist ∝ N`` a
+    full-corpus fit would re-scan the corpus every k-means iteration;
+    the sample is partitioning-independent (pure hash predicate), so the
+    trained quantizer is stable for a given (corpus, nlist, seed).
 
-    Assignment deliberately stays on ``model.transform`` — a SHUFFLE-FREE
-    narrow map (JVM BLAS argmin per row). The deterministic twin
-    (:func:`ivf_topk_fixed`) now matches this shape with a Python-side
-    BLAS argmin kernel (:func:`_assign_cells_blas`): O(N) assignment
-    rows, no corpus shuffle, no N×nlist intermediate."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    ``trained=False``: the centroids are the ``nlist`` corpus vectors
+    with the smallest ids (:func:`_seed_centroid_rows` — the k-means||
+    init step without the iterations). No random training, and every
+    arithmetic step (squared-distance assignment, cosine re-rank,
+    (dist, cell) tie-breaks) exists verbatim in ANSI SQL — so the ENTIRE
+    IVF pipeline is value-checkable by an external oracle. Quantization
+    quality is worse than trained centroids.
 
+    Both quantizers share one plan: centroids broadcast (nlist rows),
+    corpus assignment = BLAS argmin mapInPandas kernel emitting O(N) rows
+    (:func:`_assign_cells_blas` — shuffle-free, no N×nlist intermediate),
+    the cell id as the join key so a query reads ~``nprobe/nlist`` of the
+    corpus, re-rank only inside probed cells. The QUERY-side assignment
+    keeps the tiny crossJoin (Q×nlist rows, both sides broadcast-small)
+    because the oracle needs its nprobe ranking verbatim in SQL."""
     c = with_double_embedding(corpus, vec_col).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
     )
@@ -291,27 +303,19 @@ def ivf_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
 
-    train = _train_sample(c, nlist, seed).select(
-        array_to_vector("c_vec").alias("features")
+    # nlist centroid rows, collected once (bounded, broadcast-small)
+    centroid_rows = (
+        _trained_centroid_rows(c, nlist, seed) if trained else _seed_centroid_rows(c, nlist)
     )
-    model = KMeans(k=nlist, seed=seed, featuresCol="features", predictionCol="cell").fit(train)
-
-    assigned = model.transform(
-        c.select("vec_id", "c_vec", array_to_vector("c_vec").alias("features"))
-    ).select("vec_id", "c_vec", "cell")
-
-    # (cell, centroid) relation — nlist rows, broadcastable by construction
-    centroids = q.sparkSession.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>",
+    centroids = corpus.sparkSession.createDataFrame(
+        centroid_rows, "cell int, centroid array<double>"
     )
+    assigned = _assign_cells_blas(c, centroid_rows)
 
-    # nprobe nearest cells per query (query set is small: cross join against
-    # nlist centroids, rank by L2 distance)
     qc = q.crossJoin(F.broadcast(centroids)).withColumn(
         "dist2",
         F.aggregate(
-            F.zip_with("q_vec", "centroid", lambda a, b: (a - b) * (a - b)),
+            F.zip_with("q_vec", "centroid", lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
             lambda s, v: s + v,
         ),
@@ -2093,43 +2097,6 @@ def embedding_cosine_pairs(
     )
 
 
-def lsh_bucket_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate cosine top-k: score only within the query's hyperplane
-    bucket. One shuffle on the bucket key; bucket sizes ≈ N/2^planes, so
-    cost drops from O(N·Q) to O(N·Q/2^planes) with tunable recall."""
-    c = with_double_embedding(corpus, vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-    )
-    q = with_double_embedding(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = c.withColumn("bucket", hyperplane_signature(F.col("c_vec"), num_planes, dim))
-    q = q.withColumn("bucket", hyperplane_signature(F.col("q_vec"), num_planes, dim))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec")) / (_norm(F.col("q_vec")) * _norm(F.col("c_vec"))),
-        )
-        .select("query_id", "vec_id", "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
 def _probe_buckets(bucket, num_planes: int, probes: int):
     """Multi-probe expansion: the bucket itself plus the ``probes``
     nearest neighbor buckets at Hamming distance 1 (single sign-bit
@@ -2150,7 +2117,7 @@ def lsh_multiprobe_topk(
     probes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    signature=None,
+    md5_family: bool = False,
 ) -> DataFrame:
     """Multi-probe hyperplane LSH top-k: each query scores its own bucket
     AND the ``probes`` buckets one sign-flip away. A true neighbor lands
@@ -2159,15 +2126,20 @@ def lsh_multiprobe_topk(
     one-plane-straddle misses — the dominant loss mode — lifting recall
     toward exact at ~(probes+1)× candidate cost, WITHOUT duplicating the
     corpus into multiple tables (the classic recall fix, num_tables×
-    memory, is the expensive alternative at 100 TB).
+    memory, is the expensive alternative at 100 TB). ``probes=0`` is the
+    single-bucket form: cost drops from O(N·Q) to O(N·Q/2^planes) with
+    tunable recall.
 
     Plan shape: corpus signature is a narrow map; the query side explodes
     to (probes+1) rows per query and broadcasts; one bucket-equality
     join; per-query top-k window. Probe buckets are distinct, so each
-    candidate pair appears at most once — no dropDuplicates shuffle."""
-    sig_fn = signature or (
-        lambda vec: hyperplane_signature(vec, num_planes, dim)
-    )
+    candidate pair appears at most once — no dropDuplicates shuffle.
+    ``md5_family`` picks the hyperplane family
+    (:func:`hyperplane_signature`)."""
+
+    def sig_fn(vec):
+        return hyperplane_signature(vec, num_planes, dim, md5_family=md5_family)
+
     c = with_double_embedding(corpus, vec_col).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
     )
@@ -2195,27 +2167,6 @@ def lsh_multiprobe_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cosine", "rank")
     )
-
-
-def md5_signature(num_planes: int, dim: int):
-    """Signature column builder over md5-derived literal hyperplanes
-    (:func:`hyperplane_weights_md5`) — SQL-reproducible, for oracle
-    twins."""
-    weights = hyperplane_weights_md5(num_planes, dim)
-
-    def signature(vec):
-        sig = None
-        for p, w in enumerate(weights):
-            proj = F.aggregate(
-                F.zip_with(vec, F.array(*[F.lit(x) for x in w]), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda s, v: s + v,
-            )
-            bit = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-            sig = bit if sig is None else sig + bit
-        return sig
-
-    return signature
 
 
 def radius_search(
@@ -2267,58 +2218,6 @@ def hyperplane_weights_md5(num_planes: int, dim: int) -> list[list[float]]:
         ]
         for p in range(num_planes)
     ]
-
-
-def lsh_bucket_topk_md5(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    num_planes: int = 6,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`lsh_bucket_topk` with md5-derived literal hyperplanes —
-    the oracle-checkable twin (xxhash64 planes cannot be reproduced in
-    SQL). Same plan shape: signature as int bucket, broadcast query
-    side, one bucket-equality join, per-query top-k window."""
-    weights = hyperplane_weights_md5(num_planes, dim)
-
-    def signature(vec):
-        sig = None
-        for p, w in enumerate(weights):
-            proj = F.aggregate(
-                F.zip_with(vec, F.array(*[F.lit(x) for x in w]), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda s, v: s + v,
-            )
-            bit = F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
-            sig = bit if sig is None else sig + bit
-        return sig
-
-    c = with_double_embedding(corpus, vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-    )
-    q = with_double_embedding(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = c.withColumn("bucket", signature(F.col("c_vec")))
-    q = q.withColumn("bucket", signature(F.col("q_vec")))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec")) / (_norm(F.col("q_vec")) * _norm(F.col("c_vec"))),
-        )
-        .select("query_id", "vec_id", "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
 
 
 def quantize_int8(
@@ -2431,7 +2330,7 @@ def _trained_centroid_rows(
     """Trained k-means centroids, fit on the deterministic hash-sample
     (:func:`_train_sample`, capped ~256·nlist vectors) — the PRODUCTION
     quantizer the seed-vector path (:func:`_seed_centroid_rows`) stands
-    in for in the oracle-checked twins. Same return shape
+    in for in the oracle-checked ``trained=False`` forms. Same return shape
     ``[(cell, [float, ...])]`` so every consumer (freeze into the store
     companion table, :func:`_assign_cells_blas` broadcast) is shared.
     Sampling the fit is the 100-TB contract: with ``nlist ∝ N`` a
@@ -2464,86 +2363,6 @@ def _trained_centroid_rows(
     ]
 
 
-def ivf_topk_fixed(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nlist: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k with a DETERMINISTIC coarse quantizer: the centroids are
-    the ``nlist`` corpus vectors with the smallest ids (seed vectors, the
-    k-means|| init step without the iterations).
-
-    The cross-engine-reproducible twin of :func:`ivf_topk`: no random
-    k-means training, every arithmetic step (sequential sum of squared
-    diffs for assignment, cosine re-rank, (dist, cell) tie-breaks) exists
-    verbatim in ANSI SQL — so the ENTIRE IVF pipeline (assignment →
-    nprobe cell pruning → exact re-rank) is value-checkable by an
-    external oracle, where the k-means path can only get a rows-only
-    check. Quantization quality is worse than trained centroids; use the
-    k-means variant in production, this one to validate the algorithm.
-
-    Shape is identical to the production path: centroids broadcast
-    (nlist rows), corpus assignment = BLAS argmin mapInPandas kernel
-    emitting O(N) rows (see :func:`_assign_cells_blas` — no N×nlist
-    intermediate, no corpus-wide window), probes broadcast, re-rank only
-    inside probed cells. The QUERY-side assignment keeps the tiny
-    crossJoin (Q×nlist rows, both sides broadcast-small) because the
-    oracle needs its nprobe ranking verbatim in SQL.
-    """
-    c = with_double_embedding(corpus, vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-    )
-    q = with_double_embedding(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-
-    # nlist seed rows, collected once (bounded, broadcast-small)
-    centroid_rows = _seed_centroid_rows(c, nlist)
-    centroids = corpus.sparkSession.createDataFrame(
-        centroid_rows, "cell int, centroid array<double>"
-    )
-
-    def _dist2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-
-    assigned = _assign_cells_blas(c, centroid_rows)
-
-    qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "dist2", _dist2(F.col("q_vec"), F.col("centroid"))
-    )
-    probe_w = W.partitionBy("query_id").orderBy(F.asc("dist2"), F.asc("cell"))
-    probes = (
-        qc.withColumn("probe_rank", F.row_number().over(probe_w))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select("query_id", "q_vec", "cell")
-    )
-
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec"))
-            / (_norm(F.col("q_vec")) * _norm(F.col("c_vec"))),
-        )
-        .select("query_id", "vec_id", "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
 def semdedup(
     corpus: DataFrame,
     nlist: int = 8,
@@ -2559,11 +2378,12 @@ def semdedup(
 
     Returns one row per input vector: ``(vec_id, cell, keep)``.
 
-    Deterministic seed-vector coarse quantizer (the :func:`ivf_topk_fixed`
-    quantizer) so every step — assignment, within-cell pairing, cosine,
-    verdict — exists verbatim in ANSI SQL and the WHOLE pipeline is
-    value-checkable by an external oracle; production can swap trained
-    k-means centroids into the same shape unchanged.
+    Deterministic seed-vector coarse quantizer (the
+    ``ivf_topk(trained=False)`` quantizer) so every step — assignment,
+    within-cell pairing, cosine, verdict — exists verbatim in ANSI SQL
+    and the WHOLE pipeline is value-checkable by an external oracle;
+    production can swap trained k-means centroids into the same shape
+    unchanged.
 
     Scale shape (100 TB): pairwise cosine is confined INSIDE cells —
     O(Σ cell²) exactly like the LSH bucket join, bounded by growing
@@ -2802,15 +2622,6 @@ def _read_centroids(spark, centroids_table: str):
     got = [(int(r["cell"]), list(r["c_vec"])) for r in rows]
     _CENTROID_CACHE[centroids_table] = (created, got)
     return got
-
-
-def _stored_centroid_rows(spark, cells_table: str):
-    """Centroids FROZEN at persist time, read back from the live
-    version's companion table — NOT re-derived from the store's current
-    lowest ids, which would silently re-seed the quantizer (and orphan
-    every stored cell assignment) the moment an append carries an id
-    below the original seeds."""
-    return _read_centroids(spark, _live_tables(spark, cells_table)[1])
 
 
 def drop_corpus_cells(spark, cells_table: str) -> None:
@@ -3579,44 +3390,6 @@ def jl_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
-def jl_project_packed(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_dim: int = 16,
-    in_dim: int = 64,
-    out_col: str = "embedding",
-) -> DataFrame:
-    """:func:`jl_project` with the projected vector kept PACKED as
-    ``array<double>`` (one row per input) instead of exploded to
-    (id, dim, value) rows — the shape downstream vector operators
-    (semdedup, cosine joins) consume directly. Same deterministic sign
-    matrix, same single-GEMM-per-batch kernel, same zero-shuffle plan."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    R = jl_sign_matrix(in_dim, out_dim)
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField(out_col, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def _kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            P = np.array(list(pdf[vec_col]), dtype=np.float64) @ R
-            yield pd.DataFrame({"vec_id": ids, out_col: list(P)})
-
-    return with_double_embedding(df.select(id_col, vec_col), vec_col).mapInPandas(
-        _kernel, out_schema
     )
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import partition_columns
 from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.plans.jobs import JobState
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import _path_exists
 
 PARTITION_COLS = ("year", "month", "day", "hour")
 
@@ -62,14 +63,6 @@ def create_partitioned_table(spark: SparkSession, table_root: str) -> None:
     fs = path.getFileSystem(conf)
     fs.mkdirs(path)
     register_landing_root(table_root)
-
-
-def _table_exists(spark: SparkSession, table_root: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(table_root)
-    fs = path.getFileSystem(conf)
-    return bool(fs.exists(path))
 
 
 def with_partition_columns(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -120,7 +113,7 @@ def write_partition_overwrite(
     callers (the JobRegistry) fold exceptions to ``FAILURE``.
     """
     spark = df.sparkSession
-    if create_never and not _table_exists(spark, table_root):
+    if create_never and not _path_exists(spark, table_root):
         raise TableNotFoundError(
             f"table root {table_root!r} does not exist and create_never is set "
             "(reference parity: create_disposition=CREATE_NEVER)"
@@ -335,7 +328,7 @@ def repair_rollup(
     Returns the list of repaired partitions.
     """
     landing = set(list_table_partitions(spark, table_root))
-    have = set(list_table_partitions(spark, rollup_root)) if _table_exists(
+    have = set(list_table_partitions(spark, rollup_root)) if _path_exists(
         spark, rollup_root
     ) else set()
     missing = sorted(landing - have)
@@ -380,7 +373,7 @@ def merge_upsert_partition(
     case degenerates to insert."""
     from ..sources.probe import partition_file_count
 
-    if not _table_exists(spark, table_root):
+    if not _path_exists(spark, table_root):
         raise TableNotFoundError(
             f"merge_upsert_partition: table root does not exist: {table_root} "
             "(create it with create_partitioned_table first; MERGE never "

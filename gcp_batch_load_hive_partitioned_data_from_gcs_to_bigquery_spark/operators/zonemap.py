@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.probe import _path_exists
+
 #: Store directory for the persisted zone map, INSIDE the table root.
 #: The leading underscore makes Spark's file listing treat it as hidden
 #: (the ``_delta_log`` / ``_spark_metadata`` convention), so data scans
@@ -135,16 +137,9 @@ def partition_zone_map(
     return df.groupBy(part).agg(*aggs)
 
 
-def _store_exists(spark: SparkSession, store: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(store)
-    return path.getFileSystem(conf).exists(path)
-
-
 def has_zone_map(spark: SparkSession, table_root: str) -> bool:
     """Whether a persisted zone-map store exists for ``table_root``."""
-    return _store_exists(spark, zone_map_path(table_root))
+    return _path_exists(spark, zone_map_path(table_root))
 
 
 #: Driver-side snapshot of each persisted store's rows (the Delta-snapshot
@@ -196,7 +191,7 @@ def _cached_store_rows(spark: SparkSession, table_root: str) -> list | None:
     served from the driver cache while the store's on-disk fingerprint is
     unchanged; re-collected (and re-cached) after any refresh."""
     store = zone_map_path(table_root)
-    if not _store_exists(spark, store):
+    if not _path_exists(spark, store):
         _STORE_CACHE.pop(store, None)
         return None
     fp = _store_fingerprint(spark, store)
@@ -218,7 +213,7 @@ def _cached_store_rows(spark: SparkSession, table_root: str) -> list | None:
 def load_zone_map(spark: SparkSession, table_root: str) -> DataFrame | None:
     """The persisted per-file stats table, or ``None`` if never built."""
     store = zone_map_path(table_root)
-    if not _store_exists(spark, store):
+    if not _path_exists(spark, store):
         return None
     zm = spark.read.parquet(store)
     # partition-column type inference reads part_key back as an integer;
@@ -269,17 +264,6 @@ def refresh_zone_map(
         .parquet(zone_map_path(table_root))
     )
     _STORE_CACHE.pop(zone_map_path(table_root), None)
-
-
-def maybe_refresh_zone_map(
-    spark: SparkSession, table_root: str, partitions: list[str]
-) -> bool:
-    """Sink hook: incrementally refresh the touched hours' stats iff a
-    store exists (no-op otherwise). Returns whether a refresh ran."""
-    if not has_zone_map(spark, table_root):
-        return False
-    refresh_zone_map(spark, table_root, partitions=partitions)
-    return True
 
 
 def _norm_file_path(p: str) -> str:

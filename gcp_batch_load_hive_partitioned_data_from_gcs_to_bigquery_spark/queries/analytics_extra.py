@@ -1687,7 +1687,6 @@ def q_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays all four approximate pipelines AND the brute-force exact
     ranking verbatim in SQL."""
     from ..operators import similarity as SIM
-    from ..operators.similarity import md5_signature
 
     from .catalog import _FIXTURES, _tmp
 
@@ -1713,21 +1712,22 @@ def q_ann_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("int8_shortlist20", SIM.int8_topk(emb, queries, k=20), 0.95, 190),
         (
             "ivf_nlist8_nprobe3",
-            SIM.ivf_topk_fixed(emb, queries, k=10, nlist=8, nprobe=3),
+            SIM.ivf_topk(emb, queries, k=10, nlist=8, nprobe=3, trained=False),
             0.60,
             120,
         ),
         (
             "lsh_planes6_bucket",
-            SIM.lsh_bucket_topk_md5(emb, queries, k=10, num_planes=6, dim=64),
+            SIM.lsh_multiprobe_topk(
+                emb, queries, k=10, num_planes=6, dim=64, probes=0, md5_family=True
+            ),
             0.02,
             4,
         ),
         (
             "lsh_planes6_multiprobe6",
             SIM.lsh_multiprobe_topk(
-                emb, queries, k=10, num_planes=6, dim=64, probes=6,
-                signature=md5_signature(6, 64),
+                emb, queries, k=10, num_planes=6, dim=64, probes=6, md5_family=True
             ),
             0.20,
             40,

@@ -1298,7 +1298,9 @@ def q_fn_partition_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     column expressions."""
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.functions.columns import (
         bq_partition_col,
+        glob_path_col,
         hive_path_col,
+        partition_decorator_col,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -1308,8 +1310,8 @@ def q_fn_partition_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         bq.alias("bq_partition"),
         hive.alias("hive_path"),
-        F.concat(F.lit("landing$"), bq).alias("decorated"),
-        F.format_string("gs://%s/%s/*", F.lit("bucket"), hive).alias("glob"),
+        partition_decorator_col(F.lit("landing"), bq).alias("decorated"),
+        glob_path_col(F.lit("gs://bucket"), hive).alias("glob"),
         F.upper("event_type").alias("type_upper"),
     )
 
@@ -2543,14 +2545,14 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL MinHash-LSH pipeline under a value-exact oracle: md5-family
     signatures (32 slots — every hash step exists verbatim in SQL), exact
     string band keys (8 bands × 4 rows, no bucket-hash collision term),
-    candidate pairs, and the equal-slot Jaccard estimate. The faster
-    xxhash64 family stays available as the library path
-    (`D.minhash_signatures` + hashed band buckets) — same algorithm,
-    engine-specific hashing, so the md5 family is the catalog form
-    (round 7: every catalog key must be able to earn a value-exact
-    driver row)."""
+    candidate pairs, and the equal-slot Jaccard estimate. The same
+    operator runs the faster xxhash64 family by default
+    (`D.minhash_signatures(..., md5_family=False)` + hashed band
+    buckets) — engine-specific hashing, so the md5 family is the catalog
+    form (every catalog key must be able to earn a value-exact driver
+    row)."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures_md5(docs, "doc_id", "text", num_hashes=32)
+    sigs = D.minhash_signatures(docs, "doc_id", "text", num_hashes=32, md5_family=True)
     pairs = D.minhash_lsh_pairs(
         sigs, num_bands=8, threshold=0.3, num_hashes=32, hash_buckets=False
     )
@@ -2560,13 +2562,13 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL SimHash pipeline under a value-exact oracle: 60-bit
     md5-family fingerprints (term-frequency-weighted bit votes), 4×15-bit
-    block LSH candidates, exact Hamming verify (≤ 12). The 64-bit
-    xxhash64 family stays available as the library path (`D.simhash` +
-    `D.simhash_near_pairs`) — engine-specific hashing, so the md5 family
-    is the catalog form."""
+    block LSH candidates, exact Hamming verify (≤ 12). The same
+    operators run the 64-bit xxhash64 family by default (`D.simhash` +
+    `D.simhash_near_pairs` with ``md5_family=False``) — engine-specific
+    hashing, so the md5 family is the catalog form."""
     docs = load_table(spark, sf_dir, "documents")
-    fps = D.simhash_md5(docs, "doc_id", "text")
-    pairs = D.simhash_near_pairs_md5(fps, max_hamming=12)
+    fps = D.simhash(docs, "doc_id", "text", md5_family=True)
+    pairs = D.simhash_near_pairs(fps, max_hamming=12, md5_family=True)
     return pairs.select("doc_a", "doc_b", "hamming")
 
 
@@ -2627,7 +2629,7 @@ def q_dedup_lsh_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim in the composed SQL oracle."""
     docs = load_table(spark, sf_dir, "documents")
     truth = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    sigs = D.minhash_signatures_md5(docs, "doc_id", "text", num_hashes=32)
+    sigs = D.minhash_signatures(docs, "doc_id", "text", num_hashes=32, md5_family=True)
     cand = D.minhash_lsh_pairs(
         sigs, num_bands=8, threshold=0.3, num_hashes=32, hash_buckets=False
     ).select("doc_a", "doc_b", F.lit(1).alias("_hit"))
@@ -2662,7 +2664,7 @@ def q_dedup_lsh_precision_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; integer gate; both sides verbatim in the composed oracle."""
     docs = load_table(spark, sf_dir, "documents")
     truth = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3)
-    sigs = D.minhash_signatures_md5(docs, "doc_id", "text", num_hashes=32)
+    sigs = D.minhash_signatures(docs, "doc_id", "text", num_hashes=32, md5_family=True)
     cand = D.minhash_lsh_pairs(
         sigs, num_bands=8, threshold=0.3, num_hashes=32, hash_buckets=False
     ).select("doc_a", "doc_b")
@@ -3486,16 +3488,16 @@ FROM r WHERE rank <= 3
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic-quantizer IVF (operators/similarity.py
-    ivf_topk_fixed): seed-vector centroids, sequential-sum L2 assignment
-    with (dist, cell) tie-breaks, nprobe pruning, exact cosine re-rank —
+    ivf_topk(trained=False)): seed-vector centroids, L2 assignment with
+    (dist, cell) tie-breaks, nprobe pruning, exact cosine re-rank —
     every step reproduced verbatim in the DuckDB oracle, giving the IVF
-    *algorithm* a full value check. The k-means-trained quantizer stays
-    available as the library path (`SIM.ivf_topk`, recall-gated in
-    pytest) — iterative training is engine-specific, so the fixed
+    *algorithm* a full value check. The same operator runs the
+    k-means-trained quantizer by default (`SIM.ivf_topk`, recall-gated
+    in pytest) — iterative training is engine-specific, so the fixed
     quantizer is the catalog form."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    out = SIM.ivf_topk_fixed(emb, queries, k=3, nlist=8, nprobe=3)
+    out = SIM.ivf_topk(emb, queries, k=3, nlist=8, nprobe=3, trained=False)
     return out.select("query_id", "vec_id", F.round("cosine", 4).alias("cosine"), "rank")
 
 
@@ -4137,13 +4139,15 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH ANN under a value-exact oracle: ±1 planes derived
     from md5("p_<p>_<i>") parity (computed driver-side with hashlib —
     byte-identical to SQL md5), 6-bit signature buckets, bucket-equality
-    candidates, cosine top-3 per query. The xxhash64-plane variant stays
-    available as the library path (`SIM.lsh_bucket_topk`, recall-gated in
-    pytest) — engine-specific hashing, so the md5 planes are the catalog
-    form."""
+    candidates (``probes=0``: the query's own bucket only), cosine top-3
+    per query. The same operator runs xxhash64 planes by default
+    (`SIM.lsh_multiprobe_topk`, recall-gated in pytest) — engine-specific
+    hashing, so the md5 planes are the catalog form."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    out = SIM.lsh_bucket_topk_md5(emb, queries, k=3, num_planes=6, dim=64)
+    out = SIM.lsh_multiprobe_topk(
+        emb, queries, k=3, num_planes=6, dim=64, probes=0, md5_family=True
+    )
     return out.select("query_id", "vec_id", F.round("cosine", 4).alias("cosine"), "rank")
 
 
@@ -5597,48 +5601,48 @@ ORACLES.update(BEHAVIOR_ORACLES)
 # their deterministic md5-family/fixed-quantizer forms this round) sort to
 # the front of the stale pool on their own.
 #
-# Round-18 queue — new keys and keys whose implementation changed in
-# r18 (each entry commented with what changed), per the changed-kernel
-# discipline: a green row from an earlier round attests the OLD code
-# and must not satisfy the queue.
+# Round-20 queue — keys whose implementation changed since their last
+# green row, per the changed-kernel discipline: a green row from an
+# earlier round attests the OLD code and must not satisfy the queue.
 # _ROUND_QUEUE_ROUND pins the round this queue demands evidence FROM:
-# the queue retires only when CORRECTNESS_r18 lands (rotation.py).
-# Behind the queue, the evidence-driven rotation automatically fronts
-# the r12 evidence tail (r17 verdict task 5 — the 24 keys last green
-# r12).
+# the queue retires only when CORRECTNESS_r20 lands (rotation.py).
 # Gate (per project discipline): every queued key verified with
-# scripts/check_correctness.py at sf0.01 AND sf0.1 this round before the
-# rotation landed; the whole 50-key window swept in one process at both
-# SFs before freezing.
-_ROUND_QUEUE_ROUND = 18
+# scripts/check_correctness.py at sf0.01 AND sf0.1 before the rotation
+# landed.
+_ROUND_QUEUE_ROUND = 20
 _ROUND_QUEUE = [
-    # r18 REWRITE (r17 verdict task 1): the whole IVF-PQ index family
-    # moved to the version-pointer snapshot layout ({root}/v=N +
-    # atomic _VERSION flip — build/compact/retrain stage invisibly and
-    # publish by one pointer rewrite; readers resolve once and hold
-    # snapshot isolation; recovery is a single version sweep). Every
-    # key below reads/writes through the new layout — re-evidence all.
-    "ann_ivf_pq_retrain",  # + r17 task 2: nlist now DERIVED from corpus
-    # growth (build on quarter, append 4x, retrain sizes 8->32; the
-    # oracle replays the integer ceil arithmetic from count(*) alone)
+    # MinHash / SimHash twins merged into one operator with an
+    # md5_family parameter (operators/dedup.py)
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_lsh_recall_gate",
+    "dedup_lsh_precision_gate",
+    "dedup_incremental",
+    "dedup_incremental_bucketed",
+    "stream_incremental_dedup",
+    # hyperplane-LSH and IVF twins merged: lsh_multiprobe_topk(probes=0,
+    # md5_family=True) and ivf_topk(trained=False) (operators/similarity.py)
+    "ann_lsh_topk",
+    "ann_multiprobe_oracle",
+    "ann_recall_gate",
+    "ann_ivf_topk",
+    # routed through functions/columns.py's decorator and glob columns
+    "fn_partition_strings",
+    # carried over: rewritten plans with no driver row on the new code
+    "profile_corpus_report",
+    "agg_pareto_share",
+    "approx_hll_set_ops",
+    "agg_bitmap_distinct",
+    "dedup_spans",
+    "text_contamination_bloom",
+    # retrain's default fit budget (64 samples/cell, 10 iterations)
+    # changes the default centroids of the IVF-PQ family
+    "ann_ivf_pq_retrain",
     "ann_ivf_pq_maintain",
     "ann_ivf_pq_compact",
     "ann_ivf_pq_rescore",
     "ann_ivf_pq_oracle",
     "ann_ivf_pq_append",
-    "ann_ivf_cell_skew",
-    # r18 decimal-context fixes (r17 ADVICE): writer widens precision
-    # before to_integral_exact (wide-but-exact values no longer falsely
-    # rejected); reader decodes context-free (no 28-digit rounding)
-    "source_avro",
-    # r18 OPTIMIZATION-round plan restructures (OPTIMIZATION_r18.md —
-    # value-identical by construction, every key re-verified at both
-    # SFs, but the changed-kernel discipline demands fresh driver rows):
-    "classify_naive_bayes",  # consts sourced from persisted wc/docs
-    "approx_cms_counts",  # exact count carried through countmin_query
-    "text_bpe_encode",  # train+encode share one persisted token frame
-    "text_bpe_coverage",  # same shared token frame
-    "window_sliding_quantile",  # hourly KMV sample persisted (one scan)
 ]
 
 _missing = [k for k in _ROUND_QUEUE if k not in QUERIES]

@@ -765,12 +765,12 @@ def q_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = ("corpus_bands_md5", sf_dir)
     if key not in _FIXTURES:
         name = "corpus_bands_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        sigs = D.minhash_signatures_md5(corpus, "doc_id", "text", num_hashes=32)
+        sigs = D.minhash_signatures(corpus, "doc_id", "text", num_hashes=32, md5_family=True)
         D.persist_corpus_bands(
             sigs, name, num_bands=8, num_hashes=32, hash_buckets=False, n_buckets=8
         )
         _FIXTURES[key] = name
-    batch_sigs = D.minhash_signatures_md5(batch, "doc_id", "text", num_hashes=32)
+    batch_sigs = D.minhash_signatures(batch, "doc_id", "text", num_hashes=32, md5_family=True)
     near = D.incremental_near_dup_ids_vs_table(
         spark, _FIXTURES[key], batch_sigs,
         num_bands=8, num_hashes=32, threshold=0.3, hash_buckets=False,
@@ -1068,13 +1068,12 @@ def q_ann_multiprobe_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovering one-plane-straddle misses (operators/similarity.py
     lsh_multiprobe_topk). Fully value-checked: the oracle regenerates the
     identical planes, signatures, probe set, and ranking in SQL."""
-    from ..operators.similarity import lsh_multiprobe_topk, md5_signature
+    from ..operators.similarity import lsh_multiprobe_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     out = lsh_multiprobe_topk(
-        emb, queries, k=3, num_planes=6, dim=64, probes=6,
-        signature=md5_signature(6, 64),
+        emb, queries, k=3, num_planes=6, dim=64, probes=6, md5_family=True,
     )
     return out.select(
         "query_id", "vec_id", F.round("cosine", 4).alias("cosine"),

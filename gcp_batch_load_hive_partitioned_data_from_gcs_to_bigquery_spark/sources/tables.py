@@ -19,19 +19,6 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 @lru_cache(maxsize=128)
 def _nanos_columns(path: str) -> tuple[str, ...]:
@@ -117,9 +104,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register every test table as a temp view for spark.sql queries."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -141,6 +141,16 @@ def test_cosine_topk_carry_cols_reserved_names_raise(spark):
         cosine_topk(emb, emb.limit(1), k=2, carry_cols=["cosine"])
 
 
+@pytest.mark.parametrize("name", ["c_vec", "c_norm", "q_vec", "q_norm"])
+def test_cosine_topk_carry_cols_scoring_names_raise(spark, name):
+    """A carried column named like one of the scoring columns would be
+    shadowed by (or shadow) it — a carried ``c_norm`` used to be
+    silently overwritten by the computed norm. It must be rejected."""
+    emb = _emb(spark).withColumn(name, F.lit(1.0))
+    with pytest.raises(ValueError, match="carry_cols collide"):
+        cosine_topk(emb, emb.limit(1), k=2, carry_cols=[name])
+
+
 def test_repetition_signals_carry_cols_equal_join_back(spark):
     docs = _docs(spark).withColumn("n_chars", F.length("text"))
     plain = repetition_signals(docs, "doc_id", "text")

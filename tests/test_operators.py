@@ -102,7 +102,7 @@ def test_ann_lsh_recall_vs_exact(spark, emb):
     happens via the exact join)."""
     queries = emb.filter(F.col("vec_id") < 10)
     exact = SIM.cosine_topk(emb, queries, k=3)
-    approx = SIM.lsh_bucket_topk(emb, queries, k=3, num_planes=2, dim=64)
+    approx = SIM.lsh_multiprobe_topk(emb, queries, k=3, num_planes=2, dim=64, probes=0)
     assert _recall(approx, exact) >= 0.15
 
 
@@ -121,7 +121,7 @@ def test_ann_multiprobe_dominates_single_bucket(spark, emb):
     meaningfully higher fraction on near-orthogonal vectors."""
     queries = emb.filter(F.col("vec_id") < 10)
     exact = SIM.cosine_topk(emb, queries, k=3)
-    single = SIM.lsh_bucket_topk(emb, queries, k=3, num_planes=4, dim=64)
+    single = SIM.lsh_multiprobe_topk(emb, queries, k=3, num_planes=4, dim=64, probes=0)
     multi = SIM.lsh_multiprobe_topk(emb, queries, k=3, num_planes=4, dim=64, probes=4)
     r_single, r_multi = _recall(single, exact), _recall(multi, exact)
     assert r_multi >= r_single
@@ -305,14 +305,14 @@ def test_epoch_shuffle_reproducible_and_distinct_per_epoch(spark, docs):
 def test_ivf_fixed_exhaustive_probe_equals_bruteforce(spark):
     from pyspark.sql import functions as F
 
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import cosine_topk, ivf_topk_fixed
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.similarity import cosine_topk, ivf_topk
     from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 3)
     # probing every cell removes the approximation: results must equal
     # the brute-force baseline exactly (same tie-breaks, same arithmetic)
-    approx = ivf_topk_fixed(emb, queries, k=3, nlist=4, nprobe=4)
+    approx = ivf_topk(emb, queries, k=3, nlist=4, nprobe=4, trained=False)
     exact = cosine_topk(emb, queries, k=3)
     a = {(r.query_id, r.rank): r.vec_id for r in approx.collect()}
     e = {(r.query_id, r.rank): r.vec_id for r in exact.collect()}

@@ -365,7 +365,7 @@ def test_ewma_segmented_matches_direct_recursion(spark):
 
 
 def test_simhash_md5_fold_matches_bruteforce(spark):
-    """The shuffle-free 60-bit fold (round-8 rewrite of simhash_md5)
+    """The shuffle-free 60-bit fold of simhash(md5_family=True)
     vs a per-token Python brute force: term frequency weighting
     (duplicate tokens NOT deduplicated), whitespace runs, leading and
     trailing space, case folding, utf-8 hashing, and the empty-string
@@ -373,7 +373,7 @@ def test_simhash_md5_fold_matches_bruteforce(spark):
     import hashlib
     import re
 
-    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.dedup import simhash_md5
+    from gcp_batch_load_hive_partitioned_data_from_gcs_to_bigquery_spark.operators.dedup import simhash
 
     rng = np.random.RandomState(7)
     vocab = ["alpha", "Beta", "GAMMA", "déjà", "x", "longtokenword", "42"]
@@ -388,7 +388,7 @@ def test_simhash_md5_fold_matches_bruteforce(spark):
             text = " " + text + "  "
         docs.append((i, text))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r.doc_id: r.simhash for r in simhash_md5(df, "doc_id", "text").collect()}
+    got = {r.doc_id: r.simhash for r in simhash(df, "doc_id", "text", md5_family=True).collect()}
 
     def brute(text):
         toks = re.split(r"\s+", text.strip().lower())  # '' -> [''] like F.split
